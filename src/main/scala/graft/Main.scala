@@ -107,7 +107,7 @@ object Main {
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")

@@ -798,8 +798,8 @@ object Queries {
     streamDir.toString
   }
 
-  /** Temporarily narrow the shuffle/state partitioning for a staged
-    * micro-batch streaming run (round-6): every state-store partition
+  /** Run a staged micro-batch streaming replay under a narrow
+    * shuffle/state partitioning (round-6): every state-store partition
     * costs files + maintenance PER MICRO-BATCH, and the stream-stream
     * joins keep four stores per partition — at the session's 32
     * partitions that fixed overhead was 60-90% of the streaming twins'
@@ -807,16 +807,12 @@ object Queries {
     * size, not host cores: these staged replays hold fixture-scale
     * state, and a real deployment sizes state partitions from state
     * volume at the checkpoint's first batch. Results are partitioning-
-    * independent (watermark/join semantics are per-key); the session
-    * setting is restored after the run. */
-  private def withStreamProfile[T](s: SparkSession)(f: => T): T = {
-    val k = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(k)
-    s.conf.set(k, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-    try f finally s.conf.set(k, prev)
-  }
+    * independent (watermark/join semantics are per-key). */
+  private def withStreamProfile(s: SparkSession)(
+      f: SparkSession => DataFrame): DataFrame =
+    SessionProfile.run(s, Map("spark.sql.shuffle.partitions" -> "4"))(f)
 
-  def q23StreamWindow(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q23StreamWindow(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     val schema = s.read.parquet(p(dir, "events")).schema
     val streamDir = stagedStreamDir(p(dir, "events"))
@@ -846,7 +842,7 @@ object Queries {
     * (file source → keyed state → memory sink, update mode,
     * Trigger.AvailableNow); the oracle is the batch first-wins window
     * over the same derived URL stream. */
-  def q24StreamFirstSeen(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q24StreamFirstSeen(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Streaming
     import s.implicits._
@@ -893,7 +889,7 @@ object Queries {
     * file source joined per micro-batch against the static `customer`
     * dimension (broadcast), aggregated per market segment in complete
     * mode; final table == the batch join+agg, which is the oracle. */
-  def q31StreamEnrich(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q31StreamEnrich(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     val schema = s.read.parquet(p(dir, "events")).schema
     val streamDir = stagedStreamDir(p(dir, "events"))
@@ -940,7 +936,7 @@ object Queries {
     * contribute nothing (had any been admitted, re-opened windows would
     * re-emit and break the hash, as the pre-bridge formulation did). */
   @volatile var q35LastDropped: Long = -1L
-  def q35StreamLate(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q35StreamLate(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     val events = s.read.parquet(p(dir, "events"))
     val onTime = events.select(col("ts"), col("event_type"), col("value"))
@@ -977,12 +973,6 @@ object Queries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(pr => System.err.println(
-        s"BATCH ${pr.batchId} in=${pr.numInputRows} " +
-          s"wm=${pr.eventTime.get("watermark")} " +
-          s"dropped=${pr.stateOperators.map(_.numRowsDroppedByWatermark).mkString(",")} " +
-          s"out=${Option(pr.sink).map(_.numOutputRows).getOrElse(-1L)}"))
     q35LastDropped = q.recentProgress.toSeq
       .flatMap(_.stateOperators.toSeq.map(_.numRowsDroppedByWatermark)).sum
     s.table(name).orderBy("w_start", "event_type")
@@ -1744,7 +1734,7 @@ object Queries {
     * write); this is the state-ACCUMULATION half of the API. Oracle:
     * admission order is (batch, seq) per host, so the admitted set is
     * exactly row_number ≤ cap over that order — plain ANSI SQL. */
-  def q48StreamRateLimit(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q48StreamRateLimit(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Streaming
     import s.implicits._
@@ -1845,11 +1835,13 @@ object Queries {
     ensureBucketed(s, dir)
     // Since Spark 3.1 bucketed scans don't report their sortBy order unless
     // this conf is on (it lists files at planning time to prove one file per
-    // bucket — which ensureBucketed guarantees via the pre-shuffle). It only
-    // affects bucketed-table scans, and q49 is the only query reading one.
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    val o = s.table(s"graft_b_orders_${bucketTag(dir)}").hint("merge")
-    val c = s.table(s"graft_b_customer_${bucketTag(dir)}").hint("merge")
+    // bucket — which ensureBucketed guarantees via the pre-shuffle). The
+    // frame is rooted on a clone carrying it, so it plans AND executes
+    // under the conf while `s` stays untouched.
+    val b = SessionProfile.profiled(s,
+      Map("spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true"))
+    val o = b.table(s"graft_b_orders_${bucketTag(dir)}").hint("merge")
+    val c = b.table(s"graft_b_customer_${bucketTag(dir)}").hint("merge")
     o.join(c, col("o_custkey") === col("c_custkey"))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_orders"),
@@ -1954,7 +1946,7 @@ object Queries {
     * state finite on an unbounded stream. Integer-exact output (ids +
     * microsecond gap), so the oracle is the same interval join in plain
     * batch SQL. */
-  def q52StreamJoin(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q52StreamJoin(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Streaming
     val ev = s.read.parquet(p(dir, "events"))
@@ -2193,16 +2185,9 @@ object Queries {
     // auto-broadcast inside this query's scope to reproduce that regime
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
-  def q56RuntimeFilter(s: SparkSession, dir: String): DataFrame = {
-    val saved = runtimeFilterConfs.keys
-      .map(k => k -> scala.util.Try(s.conf.get(k)).toOption).toMap
-    try {
-      runtimeFilterConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      runtimeFilterPlan(s, dir).localCheckpoint(true)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
-  }
+  def q56RuntimeFilter(s: SparkSession, dir: String): DataFrame =
+    SessionProfile.run(s, runtimeFilterConfs)(
+      runtimeFilterPlan(_, dir).localCheckpoint(true))
 
   val q56Sql: String =
     """SELECT c_nationkey, count(*)::BIGINT AS n_events,
@@ -2267,7 +2252,7 @@ object Queries {
     * dedup state or dropped by the watermark as late — both suppress
     * it — so the append-mode output is each event exactly once: the
     * plain events table, which is the oracle. */
-  def q58StreamDedup(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q58StreamDedup(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Streaming
     val ev = s.read.parquet(p(dir, "events"))
@@ -2483,7 +2468,7 @@ object Queries {
     * through exactly once, the oracle is the plain batch aggregation.
     * StreamingSpec additionally gates the replay path (same batchId
     * re-offered → no-op) and per-batch snapshot lineage. */
-  def q61StreamSink(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q61StreamSink(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     val ev = s.read.parquet(p(dir, "events"))
       .select("event_id", "user_id", "event_type", "value")
@@ -2900,7 +2885,7 @@ object Queries {
     * subject), so the oracle is the BATCH sessionization — q33's
     * gaps-and-islands SQL. State is O(open sessions), evicted at close:
     * the only sessionization that runs forever on a 100-TB firehose. */
-  def q70StreamSessions(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q70StreamSessions(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     val ev = s.read.parquet(p(dir, "events"))
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
@@ -2936,15 +2921,6 @@ object Queries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(pr => System.err.println(
-        s"BATCH ${pr.batchId} in=${pr.numInputRows} " +
-          s"wm=${pr.eventTime.get("watermark")} " +
-          s"state=${pr.stateOperators.map(o =>
-            s"${o.operatorName}:rows=${o.numRowsTotal}").mkString(",")} " +
-          s"out=${Option(pr.sink).map(_.numOutputRows).getOrElse(-1L)} " +
-          s"src=${pr.sources.map(s0 => s"${s0.startOffset}->${s0.endOffset}" +
-            s"/latest=${s0.latestOffset}").mkString(";")}"))
     s.table(name)
       .select(col("user_id"),
         col("s_start").cast("timestamp_ntz").as("s_start"),
@@ -4202,7 +4178,7 @@ object Queries {
     * (the q70 lesson). All real rows are on time by construction,
     * so the oracle is the same LEFT JOIN in plain batch SQL; the null
     * click side is pinned to -1 on both engines (integer-exact rows). */
-  def q95StreamOuterJoin(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q95StreamOuterJoin(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     val ev = s.read.parquet(p(dir, "events"))
     val t0 = ((System.currentTimeMillis() / 1000) - 300) * 1000
@@ -4223,12 +4199,6 @@ object Queries {
             (col("ts") + expr("INTERVAL 27375 DAYS"))
               .cast("timestamp").as(s"${pre}_ts")),
         d, "1-sentinel.parquet", t0 + 60000)
-      if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-        val f = new java.io.File(d.toFile, "1-sentinel.parquet")
-        System.err.println(s"Q95 SENT $pre exists=${f.exists} len=${f.length}" +
-          s" rows=${s.read.parquet(f.toString).count()}" +
-          s" mtime=${f.lastModified} t0=$t0 now=${System.currentTimeMillis}")
-      }
       d.toString
     }
     val clicks = s.readStream
@@ -4260,13 +4230,6 @@ object Queries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(pr => System.err.println(
-        s"Q95 BATCH ${pr.batchId} in=${pr.numInputRows} " +
-          s"wm=${pr.eventTime.get("watermark")} " +
-          s"out=${Option(pr.sink).map(_.numOutputRows).getOrElse(-1L)} " +
-          s"src=${pr.sources.map(s0 => s"${s0.startOffset}->${s0.endOffset}" +
-            s"/latest=${s0.latestOffset}").mkString(";")}"))
     s.table(name).orderBy("purchase_id", "click_id")
   }
 
@@ -4869,7 +4832,7 @@ object Queries {
     * range-laid-out on the key so every merge prunes by footer
     * envelope (q59's contract). Oracle: the composed upserts replayed
     * in plain SQL. */
-  def q116StreamMerge(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) {
+  def q116StreamMerge(s: SparkSession, dir: String): DataFrame = withStreamProfile(s) { s =>
     import org.apache.spark.sql.streaming.Trigger
     val ev = s.read.parquet(p(dir, "events"))
       .select("event_id", "user_id", "event_type", "value")

@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.SessionProfile
 import graft.model._
 import graft.urlcanon.UrlRewrite
 import graft.extract.Extract
@@ -45,7 +46,7 @@ import org.apache.spark.sql.expressions.Window
  * host-partitioned mapPartitions HTTP client (SURVEY §2.1 S1).
  */
 class CrawlEngine(
-    private val spark: SparkSession,
+    session: SparkSession,
     corpus: DataFrame,
     seedUrl: String,
     rules: Seq[RecipeRule],
@@ -55,11 +56,14 @@ class CrawlEngine(
     useSketch: Boolean = false,
     stopAfterWaves: Option[Int] = None) {
 
+  // every wave plans on the engine's OWN clone of the caller's session,
+  // so switching execution profiles below never writes the caller's conf
+  private val spark: SparkSession = SessionProfile.fork(session, Map.empty)
   import spark.implicits._
 
   // corpus normalized to (doc_id, spans, redirect_to, fail_attempts)
   private val corpusN: DataFrame = {
-    var c = corpus
+    var c = SessionProfile.adopt(spark, corpus)
     if (!c.columns.contains("redirect_to"))
       c = c.withColumn("redirect_to", lit(null).cast("string"))
     if (!c.columns.contains("fail_attempts"))
@@ -326,7 +330,7 @@ class CrawlEngine(
 
   // ------------------------------------------------------------ lifecycle
 
-  def run(): CrawlTables = {
+  def run(): CrawlTables = SessionProfile.active(spark) {
     seen = Seq(Seen(seedUrl, UrlRewrite.canonicalHost(seedUrl), 0, 0L)).toDF
     processed = spark.emptyDataset[ProcessedRow].toDF
     dumped = spark.emptyDataset[DumpRow].toDF
@@ -355,17 +359,12 @@ class CrawlEngine(
   /** Resume from the latest snapshot: identical final state to an
     * uninterrupted run (the reference's exact-resume contract,
     * `spiderfetch.py:169-174`, at wave granularity). */
-  def resume(): CrawlTables = {
+  def resume(): CrawlTables = SessionProfile.active(spark) {
     val io = checkpoint.getOrElse(
       throw new IllegalStateException("resume requires a checkpoint TableIO"))
     val snap = io.latest.getOrElse(
       throw new IllegalStateException("no snapshot to resume from"))
-    seen = io.table(snap, "seen"); processed = io.table(snap, "processed")
-    dumped = io.table(snap, "dump"); edges = io.table(snap, "edges")
-    aliases = io.table(snap, "aliases"); fetchLog = io.table(snap, "fetch_log")
-    robotsBlocked = io.table(snap, "robots_blocked")
-    metrics = io.table(snap, "metrics")
-    fetched = io.table(snap, "fetched")
+    loadTables(io, snap)
     seqCounter = snap.meta("seq_counter").toLong
     batchOrd = snap.meta("batch_ord").toLong
     // absent in old snapshots: Long.MaxValue keeps the (always-correct)
@@ -381,63 +380,54 @@ class CrawlEngine(
     deltas = Map.empty
     lastSnap = Some(snap)
     // resumed queue size unknown: first wave runs the big-wave profile
-    crawlLoop(ruleIdx, depth, io.table(snap, "queue"), io.table(snap, "outer_queue"),
-      startKnown = false)
+    crawlLoop(ruleIdx, depth, SessionProfile.adopt(spark, io.table(snap, "queue")),
+      SessionProfile.adopt(spark, io.table(snap, "outer_queue")), startKnown = false)
+  }
+
+  /** Point the tables at a snapshot, re-rooted onto the engine's session
+    * (TableIO reads through the caller's). */
+  private def loadTables(io: TableIO, snap: graft.tableio.Snapshot): Unit = {
+    def t(name: String) = SessionProfile.adopt(spark, io.table(snap, name))
+    seen = t("seen"); processed = t("processed"); dumped = t("dump")
+    edges = t("edges"); aliases = t("aliases"); fetchLog = t("fetch_log")
+    robotsBlocked = t("robots_blocked"); metrics = t("metrics"); fetched = t("fetched")
   }
 
   // ---- adaptive execution profile: a SMALL wave is pure driver/stage
   // latency — AQE's per-stage re-optimization jobs and a wide shuffle
   // fan-out cost more than they save (measured ~30% of fixture-crawl wall
-  // time), so waves at or below the driver-local rank threshold run with
-  // AQE off and a narrow shuffle; big waves get the session's settings
-  // back (AQE coalescing/skew handling is load-bearing at scale). Conf
-  // flips are session-scoped but the driver loop is the only planner
-  // while a crawl runs; originals are restored on every exit path.
-  private val origAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-  private val origParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-  private val origBcast =
-    spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-  private val origWsc =
-    spark.conf.get("spark.sql.codegen.wholeStage", "true")
-  private val origCgFactory =
-    spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-  private var tunedSmall = false
-  private def tuneForWaveSize(expectedRows: Long): Unit = {
-    val wantSmall = expectedRows <= SmallRankRows
-    if (wantSmall != tunedSmall) {
-      tunedSmall = wantSmall
-      if (wantSmall) {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        // broadcast joins cost one EXTRA async job per join per action
-        // (BroadcastExchange builds on its own thread pool; exchange
-        // reuse is within-query only, so every wave action rebuilds
-        // them) — ~30 of the fixture crawl's 45 jobs were broadcast
-        // builds. A tiny wave's joins run as inline 4-partition hash
-        // joins instead: the work rides the action's own job and the
-        // per-wave job count collapses to the named actions.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        // round-6 (verdict #1): the WavePhase timers put 60-75% of the
-        // small-wave floor in DRIVER time, not job execution — dominated
-        // by per-action whole-stage-codegen + expression compilation
-        // (janino), which a <=1024-row wave can never amortize (and wave
-        // plans embed per-wave literals, so the codegen cache misses
-        // every wave). Interpreted execution flips that trade: measured
-        // fixture-crawl steady 7.3s -> ~4s, cold 16.5s -> ~10s. Big
-        // waves keep codegen (it IS the right plan at scale).
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      } else restoreConf()
-    }
-  }
-  private def restoreConf(): Unit = {
-    spark.conf.set("spark.sql.adaptive.enabled", origAqe)
-    spark.conf.set("spark.sql.shuffle.partitions", origParts)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", origBcast)
-    spark.conf.set("spark.sql.codegen.wholeStage", origWsc)
-    spark.conf.set("spark.sql.codegen.factoryMode", origCgFactory)
-    tunedSmall = false
-  }
+  // time), so waves at or below the driver-local rank threshold run under
+  // `smallWave`; big waves run under the caller's settings as
+  // they stood at construction (AQE coalescing/skew handling is
+  // load-bearing at scale). Both profiles are applied to the engine's own
+  // session, which nothing else plans on; a crawl ends on the big profile,
+  // so the lazily materialized CrawlTables run under it.
+  private val smallWave: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "4",
+    // broadcast joins cost one EXTRA async job per join per action
+    // (BroadcastExchange builds on its own thread pool; exchange reuse is
+    // within-query only, so every wave action rebuilds them) — ~30 of the
+    // fixture crawl's 45 jobs were broadcast builds. A tiny wave's joins
+    // run as inline 4-partition hash joins instead: the work rides the
+    // action's own job and the per-wave job count collapses to the named
+    // actions.
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    // round-6 (verdict #1): the WavePhase timers put 60-75% of the
+    // small-wave floor in DRIVER time, not job execution — dominated by
+    // per-action whole-stage-codegen + expression compilation (janino),
+    // which a <=1024-row wave can never amortize (and wave plans embed
+    // per-wave literals, so the codegen cache misses every wave).
+    // Interpreted execution flips that trade: measured fixture-crawl
+    // steady 7.3s -> ~4s, cold 16.5s -> ~10s. Big waves keep codegen (it
+    // IS the right plan at scale).
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+  private val bigWave: Map[String, String] =
+    smallWave.keys.map(k => k -> spark.conf.get(k)).toMap
+  private def tuneForWaveSize(expectedRows: Long): Unit =
+    (if (expectedRows <= SmallRankRows) smallWave else bigWave)
+      .foreach { case (k, v) => spark.conf.set(k, v) }
 
   // main loop (spiderfetch.py:209-231). The reference's `while queue`
   // guard tests the PRE-split queue — a wave still runs (and is counted)
@@ -496,7 +486,7 @@ class CrawlEngine(
       ruleIdx += 1
     }
     tables
-  } finally restoreConf()
+  } finally tuneForWaveSize(Long.MaxValue)
 
   // split_queue (spiderfetch.py:192-207): two filtered projections, seq kept
   private def splitQueue(queue: DataFrame, lastRule: Boolean): (DataFrame, DataFrame) = {
@@ -1009,12 +999,7 @@ class CrawlEngine(
           "queue" -> TableWrite(queue), "outer_queue" -> TableWrite(outer),
           "fetch_state" -> stateWrite))
         // reload: truncates lineage, pins state to the snapshot
-        seen = io.table(snap, "seen"); processed = io.table(snap, "processed")
-        dumped = io.table(snap, "dump"); edges = io.table(snap, "edges")
-        aliases = io.table(snap, "aliases"); fetchLog = io.table(snap, "fetch_log")
-        robotsBlocked = io.table(snap, "robots_blocked")
-        metrics = io.table(snap, "metrics")
-        fetched = io.table(snap, "fetched")
+        loadTables(io, snap)
         deltas = Map.empty
         lastSnap = Some(snap)
         // the commit wrote (= materialized) every consumer of this wave's

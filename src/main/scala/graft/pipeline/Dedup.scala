@@ -288,97 +288,87 @@ object Dedup {
     require(k % bands == 0, "bands must divide k")
     kernelWarm()
     val spark = docs.sparkSession
-    import spark.implicits._
     val withSig = sigRows(docs, idCol, textCol, shingleN, k, bands)
     // EAGER materialization: five consumers (two bucket-join sides, two
     // signature rejoins, two shingle rejoins) would otherwise race the
     // cold cache and each evaluate the signature kernel concurrently —
     // measured ~6x duplicated work on first run
-    val sigs = withSig.persist()
+    val cachedSigs = withSig.persist()
     val nDocs = graft.engine.WavePhase.time(spark, "minhash_sig") {
-      sigs.count()
+      cachedSigs.count()
     }
-    val banded = capBuckets(
-      sigs.select(col("id"), posexplode(col("bandkeys")).as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), "id", bucketCap)
-    // candidate pairs as bare ids first (cheap distinct), then the
-    // signature pre-filter over k-long arrays, and only the survivors
-    // rejoin the wide shingle arrays — shingles never ride the bucket join
-    val pairs = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
     // small-corpus execution profile (round 6, same rationale as the
     // crawl's small-wave profile): below slimRejoinMinDocs everything
     // after the signature pass is broadcast-sized, and AQE's per-exchange
     // stage jobs + the 32-partition shuffles are pure dispatch latency —
     // the 9-job cascade was ~60% of steady wall (WavePhase table in
     // OPTIMIZATION_r06.md; A/B: 1.2-1.8s vs 1.8-5.1s steady). The gate is
-    // DATA size, not host shape: at production scale the big regime keeps
-    // AQE/session settings untouched. SPARK_GRAFT_Q14_SMALL_PROFILE=0
-    // opts out.
-    val smallProfile = nDocs < slimRejoinMinDocs &&
-      !sys.env.get("SPARK_GRAFT_Q14_SMALL_PROFILE").contains("0")
-    val savedConf: Seq[(String, String)] =
-      if (smallProfile) {
-        val keys = Seq("spark.sql.adaptive.enabled",
-          "spark.sql.shuffle.partitions")
-        val saved = keys.map(k => k -> spark.conf.get(k))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        saved
-      } else Nil
-    try {
-    val sigEst = size(filter(zip_with(col("sig_a"), col("sig_b"),
-      (x, y) => x === y), b => b)).cast("double") / k
-    // Rejoin regime flips on corpus size (count already in hand — no extra
-    // job). SMALL corpus (< slimRejoinMinDocs): the sigs side of the
-    // rejoin is broadcast-sized, so carrying (sig, sh) TOGETHER through
-    // one pair of joins costs nothing extra on the wire (nothing shuffles)
-    // and removes two whole join stages of driver latency — at bench scale
-    // that latency IS the query. LARGE corpus: the rejoins are shuffle
-    // joins, prefilter-doomed candidates must not drag their wide shingle
-    // arrays through the exchange (~2.4e-4 of all pairs band-collide at
-    // r=5 — real volume at 10^10 docs), so the slim two-phase shape wins:
-    // sig-only prefilter first, shingles only for survivors. Both paths
-    // evaluate the SAME predicate on the same rows — output identical.
-    val candidates =
-      if (nDocs < slimRejoinMinDocs)
-        pairs
-          .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a"),
-            col("sh").as("sh_a")), Seq("id_a"))
-          .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b"),
-            col("sh").as("sh_b")), Seq("id_b"))
-          .filter(sigEst >= threshold - estEps)
-          .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
-      else {
-        val preFiltered = pairs
-          .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-          .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-          .filter(sigEst >= threshold - estEps)
-          .select("id_a", "id_b")
-        preFiltered
-          .join(sigs.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-          .join(sigs.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-          .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
+    // DATA size, not host shape: a big corpus keeps the caller's settings.
+    val small = nDocs < slimRejoinMinDocs
+    val res = graft.SessionProfile.run(spark, if (!small) Map.empty else
+        Map("spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8")) { s =>
+      val sigs = graft.SessionProfile.adopt(s, cachedSigs)
+      val banded = capBuckets(
+        sigs.select(col("id"), posexplode(col("bandkeys")).as(Seq("band", "bucket"))),
+        Seq("band", "bucket"), "id", bucketCap)
+      // candidate pairs as bare ids first (cheap distinct), then the
+      // signature pre-filter over k-long arrays, and only the survivors
+      // rejoin the wide shingle arrays — shingles never ride the bucket join
+      val pairs = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
+        .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
+          Seq("band", "bucket"))
+        .filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b").distinct()
+      val sigEst = size(filter(zip_with(col("sig_a"), col("sig_b"),
+        (x, y) => x === y), b => b)).cast("double") / k
+      // Rejoin regime flips on corpus size (count already in hand — no extra
+      // job). SMALL corpus (< slimRejoinMinDocs): the sigs side of the
+      // rejoin is broadcast-sized, so carrying (sig, sh) TOGETHER through
+      // one pair of joins costs nothing extra on the wire (nothing shuffles)
+      // and removes two whole join stages of driver latency — at bench scale
+      // that latency IS the query. LARGE corpus: the rejoins are shuffle
+      // joins, prefilter-doomed candidates must not drag their wide shingle
+      // arrays through the exchange (~2.4e-4 of all pairs band-collide at
+      // r=5 — real volume at 10^10 docs), so the slim two-phase shape wins:
+      // sig-only prefilter first, shingles only for survivors. Both paths
+      // evaluate the SAME predicate on the same rows — output identical.
+      val candidates =
+        if (small)
+          pairs
+            .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a"),
+              col("sh").as("sh_a")), Seq("id_a"))
+            .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b"),
+              col("sh").as("sh_b")), Seq("id_b"))
+            .filter(sigEst >= threshold - estEps)
+            .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
+        else {
+          val preFiltered = pairs
+            .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+            .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+            .filter(sigEst >= threshold - estEps)
+            .select("id_a", "id_b")
+          preFiltered
+            .join(sigs.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+            .join(sigs.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+            .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
+        }
+      // exact verify as a JVM kernel (SURVEY §2.11 typed-map policy): the
+      // Catalyst formulation (size(array_intersect) / size(array_union))
+      // materializes an intersection AND a union array per candidate pair —
+      // two hash passes plus two array builds over ~10^3-element shingle
+      // sets; the kernel counts the intersection in one pass with no
+      // intermediate arrays. Same integers, same double division, so the
+      // jaccard values (and the exact-oracle comparison) are bit-identical.
+      val out = verifyPairs(candidates, threshold)
+      // materialize the (small) result so `sigs` can be released NOW
+      // rather than leaking until LRU eviction (round-2 verdict #8)
+      graft.engine.WavePhase.time(s, "minhash_join_verify") {
+        out.localCheckpoint(true)
       }
-    // exact verify as a JVM kernel (SURVEY §2.11 typed-map policy): the
-    // Catalyst formulation (size(array_intersect) / size(array_union))
-    // materializes an intersection AND a union array per candidate pair —
-    // two hash passes plus two array builds over ~10^3-element shingle
-    // sets; the kernel counts the intersection in one pass with no
-    // intermediate arrays. Same integers, same double division, so the
-    // jaccard values (and the exact-oracle comparison) are bit-identical.
-    val out = verifyPairs(candidates, threshold)
-    // materialize the (small) result so `sigs` can be released NOW rather
-    // than leaking until LRU eviction (round-2 verdict #8)
-    val res = graft.engine.WavePhase.time(spark, "minhash_join_verify") {
-      out.localCheckpoint(true)
     }
-    sigs.unpersist(false)
+    cachedSigs.unpersist(false)
     res
-    } finally savedConf.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   /** PERSISTABLE near-dup index of a corpus — bucket membership

@@ -441,18 +441,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q56: runtime bloom filter injected into the fact-side scan") {
-    val saved = Queries.runtimeFilterConfs.keys
-      .map(k => k -> scala.util.Try(spark.conf.get(k)).toOption).toMap
-    try {
-      Queries.runtimeFilterConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val p = plan(Queries.runtimeFilterPlan(spark, sf))
-      assert(p.toLowerCase.contains("might_contain"),
-        s"expected an injected bloom-filter probe on the fact side:\n$p")
-      assert(p.contains("SortMergeJoin"),
-        s"merge hint must hold (injection targets shuffle joins):\n$p")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
+    val profiled = SessionProfile.fork(spark, Queries.runtimeFilterConfs)
+    val p = plan(Queries.runtimeFilterPlan(profiled, sf))
+    assert(p.toLowerCase.contains("might_contain"),
+      s"expected an injected bloom-filter probe on the fact side:\n$p")
+    assert(p.contains("SortMergeJoin"),
+      s"merge hint must hold (injection targets shuffle joins):\n$p")
   }
 
   test("q63 rolling window: one hash exchange, RANGE frame, no self-join") {
